@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,7 +29,16 @@ object LatestState {
     * operation precedence delete > update > insert > load (a change beats
     * the snapshot it followed within the same timestamp). */
   def batch(changes: DataFrame, key: String = "user_id",
-            orderCol: String = "ts"): DataFrame = {
+            orderCol: String = "ts"): DataFrame =
+    newestImage(changes, Nil, key, orderCol)
+
+  /** `batch`'s newest-image rule with `lead` partition columns ahead of the
+    * key. Each lead column must be a function of the key, so the groups and
+    * their winners are exactly `batch`'s; a child already hash-partitioned
+    * on the lead columns then needs no second shuffle. Lead columns stay
+    * out of the tiebreak hash, so a full tie picks the image `batch` picks. */
+  private def newestImage(changes: DataFrame, lead: Seq[String], key: String,
+                          orderCol: String): DataFrame = {
     val prio = when(col("operation") === "delete", 3)
       .when(col("operation") === "update", 2)
       .when(col("operation") === "insert", 1)
@@ -40,8 +49,9 @@ object LatestState {
     // merges' idempotent-replay guarantee ("pure function of state and
     // batch") would be false: a crash-replay could materialize the other
     // image. The hash picks an arbitrary but DETERMINISTIC winner.
-    val w = Window.partitionBy(col(key)).orderBy(col(orderCol).desc, prio.desc,
-      xxhash64(changes.columns.map(col): _*).desc)
+    val content = changes.columns.filterNot(lead.contains)
+    val w = Window.partitionBy((lead :+ key).map(col): _*)
+      .orderBy(col(orderCol).desc, prio.desc, xxhash64(content.map(col): _*).desc)
     changes
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1 && col("operation") =!= "delete")
@@ -180,16 +190,34 @@ object LatestState {
     * `lib/fin-transactions-stack.ts:160-166`, rather than reloading the
     * table). State lives hash-bucketed on the key:
     * `targetPath/bucket=N/…parquet`, N = pmod(hash(key), nBuckets). Each
-    * micro-batch:
+    * micro-batch runs one pass:
     *
-    *   1. computes the batch's TOUCHED buckets (≤ nBuckets ints — the one
-    *      driver-side collect here is bounded by the layout constant, never
-    *      by data volume);
+    *   1. persists the batch's bucket projection and collects its TOUCHED
+    *      buckets in one stage (the distinct buckets of each partition,
+    *      deduplicated after the collect — at most nBuckets × partitions ints,
+    *      bounded by the layout, never by data volume). That collect fills
+    *      the cache; a batch with no touched bucket is empty and writes
+    *      nothing, not even the layout marker;
     *   2. reads ONLY those bucket directories of the existing state
-    *      (partition pruning on the `bucket` partition column);
-    *   3. re-runs the pure merge on (touched state ∪ batch);
-    *   4. rewrites ONLY the touched bucket directories (write to a tmp
-    *      layout, then per-bucket directory swap).
+    *      (partition pruning on the `bucket` partition column), with the
+    *      state schema taken from the batch, so no footer-inference job
+    *      runs;
+    *   3. shuffles (touched state ∪ batch) once on the bucket and runs
+    *      `batch`'s newest-image rule with the bucket as leading window
+    *      partition column — the same groups, since the bucket is a
+    *      function of the key, and no second shuffle;
+    *   4. writes each touched bucket as ONE file, the buckets in parallel
+    *      across the shuffle's tasks, to a tmp layout, then swaps ONLY the
+    *      touched bucket directories in.
+    *
+    * That is four Spark jobs on an existing state: the touched collect, the
+    * file listing of the state root (a job only once the root holds more
+    * than Spark's parallel-discovery threshold of 32 bucket dirs), and the
+    * shuffle and write stages. The cache is released when the batch ends,
+    * failed or not. `persist` keeps the lineage: an executor lost mid-batch
+    * recomputes its partitions from the source files, where a
+    * `localCheckpoint` would fail the batch with
+    * `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`.
     *
     * Per-batch cost is O(|batch| + |state|·touched/nBuckets) instead of
     * O(|state|): a micro-batch touching k keys rewrites at most k buckets
@@ -215,50 +243,56 @@ object LatestState {
                                    key: String = "user_id", orderCol: String = "ts",
                                    nBuckets: Int = 64)
       : (DataFrame, Long) => Unit = { (batchDf: DataFrame, _: Long) =>
-    if (!batchDf.isEmpty) {
-      val target = new java.io.File(targetPath)
-      recoverRebucketSwap(targetPath)
-      recoverAsideBuckets(target)
-      checkOrWriteLayout(target, nBuckets, key)
-      val withB = batchDf.withColumn("bucket", pmod(hash(col(key)), lit(nBuckets)))
-        // The bucket projection is consumed twice (touched-list + merge);
-        // localCheckpoint keeps the source micro-batch from being rescanned.
-        .localCheckpoint()
-      val touched = withB.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).sorted // bounded by nBuckets
-      val existing =
-        if (target.exists() && target.listFiles().exists(_.getName.startsWith("bucket=")))
-          Some(spark.read.parquet(targetPath)
-            .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-            .withColumn("operation", lit("load")))
-        else None
-      val all = existing.fold(withB)(withB.unionByName(_))
-      val merged = batch(all, key, orderCol).drop("operation")
-      val tmp = new java.io.File(targetPath + ".tmp")
-      if (tmp.exists()) rm(tmp)
-      merged.write.partitionBy("bucket").parquet(tmp.getPath)
-      // Per-bucket swap: only the touched directories change; every other
-      // bucket's files are left byte-identical (asserted in CdcSpec).
-      // Swap discipline (crash-safe): rename the old dir ASIDE first, then
-      // the new dir in, then drop the aside copy — at no instant is the
-      // bucket's only surviving copy inside the tmp layout, so a crash in
-      // this window is recoverable (recoverAsideBuckets on replay).
-      target.mkdirs()
-      touched.foreach { b =>
-        val dst = new java.io.File(target, s"bucket=$b")
-        val aside = new java.io.File(target, s"${AsidePrefix}$b")
-        if (aside.exists()) rm(aside) // leftover garbage; dst holds the data
-        if (dst.exists() && !dst.renameTo(aside))
-          throw new java.io.IOException(s"bucket set-aside failed: $dst -> $aside")
-        val src = new java.io.File(tmp, s"bucket=$b")
-        // A touched bucket whose keys all ended deleted has no output dir:
-        // removing the old dir IS the merge result for it.
-        if (src.exists() && !src.renameTo(dst))
-          throw new java.io.IOException(s"bucket swap failed: $src -> $dst")
-        if (aside.exists()) rm(aside)
+    // Consumed twice (touched list + merge): persist keeps the source
+    // micro-batch from being rescanned.
+    val withB = batchDf.withColumn("bucket", pmod(hash(col(key)), lit(nBuckets))).persist()
+    try {
+      val touched = withB.select(col("bucket")).as(Encoders.scalaInt)
+        .mapPartitions(_.toSet.iterator)(Encoders.scalaInt)
+        .collect().distinct.sorted
+      if (touched.nonEmpty) {
+        val target = new java.io.File(targetPath)
+        recoverRebucketSwap(targetPath)
+        recoverAsideBuckets(target)
+        checkOrWriteLayout(target, nBuckets, key)
+        val existing =
+          if (target.listFiles().exists(_.getName.startsWith("bucket=")))
+            // Existing state re-enters the merge as the lowest-precedence
+            // image ("load"), as in the full-rewrite merge.
+            Some(spark.read.schema(withB.drop("operation").schema).parquet(targetPath)
+              .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
+              .withColumn("operation", lit("load")))
+          else None
+        // A repartition with a fixed count is never coalesced by AQE, so
+        // the write keeps one task per shuffle partition.
+        val all = existing.fold(withB)(withB.unionByName(_))
+          .repartition(spark.sessionState.conf.numShufflePartitions, col("bucket"))
+        val merged = newestImage(all, Seq("bucket"), key, orderCol).drop("operation")
+        val tmp = new java.io.File(targetPath + ".tmp")
+        if (tmp.exists()) rm(tmp)
+        merged.write.partitionBy("bucket").parquet(tmp.getPath)
+        // Per-bucket swap: only the touched directories change; every other
+        // bucket's files are left byte-identical (asserted in CdcSpec).
+        // Swap discipline (crash-safe): rename the old dir ASIDE first, then
+        // the new dir in, then drop the aside copy — at no instant is the
+        // bucket's only surviving copy inside the tmp layout, so a crash in
+        // this window is recoverable (recoverAsideBuckets on replay).
+        touched.foreach { b =>
+          val dst = new java.io.File(target, s"bucket=$b")
+          val aside = new java.io.File(target, s"${AsidePrefix}$b")
+          if (aside.exists()) rm(aside) // leftover garbage; dst holds the data
+          if (dst.exists() && !dst.renameTo(aside))
+            throw new java.io.IOException(s"bucket set-aside failed: $dst -> $aside")
+          val src = new java.io.File(tmp, s"bucket=$b")
+          // A touched bucket whose keys all ended deleted has no output dir:
+          // removing the old dir IS the merge result for it.
+          if (src.exists() && !src.renameTo(dst))
+            throw new java.io.IOException(s"bucket swap failed: $src -> $dst")
+          if (aside.exists()) rm(aside)
+        }
+        rm(tmp)
       }
-      rm(tmp)
-    }
+    } finally withB.unpersist()
   }
 
   /** `_` prefix: Spark's file listing ignores `_`/`.`-prefixed paths, so an

@@ -1,6 +1,9 @@
 package graft
 
 import graft.cdc.{Envelope, LatestState}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CDC2–CDC4 envelope + CDC9 latest-state: round-trip fidelity, selection
@@ -157,6 +160,71 @@ class CdcSpec extends SparkSpec {
     merge(b3, 2L)
     val replayed = LatestState.readState(spark, dir)
     assert(replayed.except(batch).isEmpty && batch.except(replayed).isEmpty)
+  }
+
+  /** `n` distinct users from `first`, one change each. The local scan
+    * splits them over the session's 4 cores, so several tasks hold rows of
+    * one bucket, and adds no shuffle of its own, like a file-stream batch. */
+  private def manyUsers(first: Int, n: Int, city: String, at: String, op: String): DataFrame =
+    Fixtures.df(spark, (first until first + n).map(u =>
+      Fixtures.row(u, city, "CREDIT", s"$u.00", 120, "ENQUIRY", at)))
+      .withColumn("operation", lit(op))
+
+  test("incremental merge: one batch on an existing state runs a pinned number of jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_state_jobs").toString + "/state"
+    val merge = LatestState.foreachBatchMergeIncremental(spark, dir, nBuckets = 16)
+    merge(manyUsers(1, 200, "BOM", "2024-01-01 10:00:00", "load"), 0L)
+    val group = "graft-merge-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one incremental merge")
+      try merge(manyUsers(100, 200, "DEL", "2024-01-01 11:00:00", "update"), 1L)
+      finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    // The touched-bucket collect (it also fills the cache), then the
+    // shuffle and write stages. The state read adds no job: its schema
+    // comes from the batch and 16 bucket dirs list serially.
+    assert(jobs.get === 3)
+  }
+
+  test("incremental merge: each touched bucket is written as one file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_state_files").toString + "/state"
+    val merge = LatestState.foreachBatchMergeIncremental(spark, dir, nBuckets = 16)
+    def parquetFiles(): Map[String, Int] =
+      new java.io.File(dir).listFiles().filter(_.getName.startsWith("bucket="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    merge(manyUsers(1, 200, "BOM", "2024-01-01 10:00:00", "load"), 0L)
+    assert(parquetFiles().size === 16 && parquetFiles().values.forall(_ == 1))
+    merge(manyUsers(150, 200, "DEL", "2024-01-01 11:00:00", "update"), 1L)
+    assert(parquetFiles().size === 16 && parquetFiles().values.forall(_ == 1))
+    assert(LatestState.readState(spark, dir).count() === 349)
+  }
+
+  test("incremental merge: an empty batch writes nothing; no batch leaves a cache behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_state_empty").toString + "/state"
+    val merge = LatestState.foreachBatchMergeIncremental(spark, dir, nBuckets = 16)
+    val b1 = Fixtures.df(spark, Seq(
+      Fixtures.row(1, "BOM", "CREDIT", "100.00", 120, "ENQUIRY", "2024-01-01 10:00:00")))
+      .withColumn("operation", lit("load"))
+    val cache = spark.sharedState.cacheManager
+    merge(b1.filter(lit(false)), 0L)
+    assert(!new java.io.File(dir).exists()) // so no layout marker either
+    assert(cache.isEmpty)
+    merge(b1, 1L)
+    assert(new java.io.File(dir, "_graft_layout.json").exists())
+    assert(cache.isEmpty)
+    intercept[IllegalArgumentException] {
+      LatestState.foreachBatchMergeIncremental(spark, dir, nBuckets = 8)(b1, 2L)
+    }
+    assert(cache.isEmpty)
   }
 
   test("incremental merge: layout marker rejects a mismatched nBuckets") {
@@ -347,6 +415,15 @@ class CdcSpec extends SparkSpec {
     assert(winner(Fixtures.df(spark, rows.reverse)) === a)
     assert(winner(Fixtures.df(spark, rows).repartition(13)) === a)
     assert(winner(Fixtures.df(spark, rows).coalesce(1)) === a)
+    // the incremental merge applies the same rule, so it keeps the same image
+    def mergedWinner(df: DataFrame): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_state_tie").toString + "/state"
+      LatestState.foreachBatchMergeIncremental(spark, dir, nBuckets = 16)(
+        df.withColumn("operation", lit("update")), 0L)
+      LatestState.readState(spark, dir).collect().map(_.getAs[String]("city")).head
+    }
+    assert(mergedWinner(Fixtures.df(spark, rows)) === a)
+    assert(mergedWinner(Fixtures.df(spark, rows.reverse).repartition(13)) === a)
   }
 
   test("scd2History: validity chain, versions, current flag") {

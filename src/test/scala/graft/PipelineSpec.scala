@@ -1,6 +1,6 @@
 package graft
 
-import graft.cdc.LatestState
+import graft.cdc.{Envelope, LatestState}
 import graft.datagen.DataGen
 import graft.functions.Validation
 import graft.sources.{CdcSource, Oltp}
@@ -65,5 +65,41 @@ class PipelineSpec extends SparkSpec {
     assert(v + bad.count() === 500)
     assert(bad.select(explode(col("violations"))).distinct()
       .collect().map(_.getString(0)).toSet === Set("transaction_type_domain"))
+  }
+
+  test("incremental merge inside a foreachBatch stream == batch compaction, over two batches") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_e2e_inc").toString
+    val drop = tmp + "/drop"
+    val statePath = tmp + "/state"
+    def drain(): Unit = {
+      val q = CdcSource.activityStream(spark, drop)
+        .writeStream
+        .foreachBatch(LatestState.foreachBatchMergeIncremental(spark, statePath))
+        .option("checkpointLocation", tmp + "/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+    }
+
+    // batch 0: the full load
+    val initial = DataGen.activity(spark, rows = 300, seed = 7L)
+    CdcSource.writeEnvelopes(initial, "load", drop)
+    drain()
+    // batch 1: February updates of the first 100 ids of the slice, plus
+    // deletes of every 7th loaded user, dated after the updates
+    CdcSource.writeEnvelopes(DataGen.activity(spark, rows = 100, seed = 7L,
+      baseTs = "2024-02-01 00:00:00"), "update", drop)
+    CdcSource.writeEnvelopes(initial.filter(pmod(col("user_id"), lit(7)) === 0)
+      .withColumn("ts", col("ts") + expr("INTERVAL 60 DAYS")), "delete", drop)
+    drain()
+
+    val changes = Envelope.flatten(Envelope.selection(Envelope.decode(spark.read.text(drop))))
+    val expected = LatestState.batch(changes).drop("operation")
+    val streamed = LatestState.readState(spark, statePath)
+    val cols = expected.columns.sorted.map(col).toSeq
+    assert(streamed.select(cols: _*).exceptAll(expected.select(cols: _*)).isEmpty
+      && expected.select(cols: _*).exceptAll(streamed.select(cols: _*)).isEmpty)
+    val deleted = initial.filter(pmod(col("user_id"), lit(7)) === 0).count()
+    assert(deleted > 0 && streamed.count() === 300 - deleted)
   }
 }
